@@ -52,6 +52,7 @@ from search_replica_spark.analysis.tokenizer import tokenize_flat
 from search_replica_spark.config import IndexConfig
 from search_replica_spark.index.codec import encode_postings_blocks
 from search_replica_spark.index.manifest import Manifest, input_fingerprint
+from search_replica_spark.query.weight import idf as term_idf, tf_norm
 
 SEGMENT_SCHEMA = (
     "term string, block_id int, n int, first_doc_idx long, last_doc_idx long, "
@@ -242,17 +243,16 @@ def _encode_blocks_fn(n_docs: int, avg_dl: float, cfg: IndexConfig):
     store_dl = cfg.store_doclens
     store_pos = cfg.store_positions
     blocks_per_range = max(1, range_docs // bs)
-    import math
 
     def fn(key, pdf: pd.DataFrame):
         term, salt = key
         df_t = int(pdf["df_hot"].iloc[0]) if pd.notna(pdf["df_hot"].iloc[0]) else len(pdf)
-        idf = math.log(1.0 + (n_docs - df_t + 0.5) / (df_t + 0.5))
+        idf = term_idf(n_docs, df_t)
         pdf = pdf.sort_values("doc_idx")
         doc_idx = pdf["doc_idx"].to_numpy(np.int64)
         tf = pdf["tf"].to_numpy(np.int64)
         dl = pdf["doc_len"].to_numpy(np.float64)
-        score = idf * (tf / (tf + k1 * (1.0 - b + b * dl / avg_dl)))
+        score = idf * tf_norm(tf, dl, k1, b, avg_dl)
         base_block = int(salt) * blocks_per_range
         if store_dl:
             blocks = encode_postings_blocks(doc_idx, tf, score, bs, dl=dl.astype(np.int64))
@@ -297,8 +297,8 @@ def _encode_partition_arrow(
     The win over the grouped-map path (measured, guide §4): no 47M-row
     Arrow→pandas conversion (the term column alone materialized one Python
     string object per posting), no per-group pandas DataFrame, no per-group
-    Python sort. Scoring math is copied verbatim from _encode_blocks_fn —
-    the two paths produce bit-identical segments (tested).
+    Python sort. Both paths score with the shared weight kernel
+    (query.weight) and produce bit-identical segments (tested).
 
     ``dl_bc``/``hot_bc`` (set together): Spark broadcasts of the doc_len
     array (doc_idx-indexed) and the {hot term: df} dict. The JVM→Python
@@ -319,7 +319,6 @@ def _encode_partition_arrow(
     k1, b, bs, range_docs = cfg.k1, cfg.b, cfg.block_size, cfg.salt_range_docs
     store_dl = cfg.store_doclens
     blocks_per_range = max(1, range_docs // bs)
-    import math
 
     def fn(batches):
         import pyarrow as pa
@@ -349,9 +348,9 @@ def _encode_partition_arrow(
             if dl_arr is not None:
                 dl = dl_arr[doc_idx]
             df_t = int(df_hot) if df_hot >= 0 else doc_idx.size
-            idf = math.log(1.0 + (n_docs - df_t + 0.5) / (df_t + 0.5))
+            idf = term_idf(n_docs, df_t)
             dlf = dl.astype(np.float64)
-            score = idf * (tf / (tf + k1 * (1.0 - b + b * dlf / avg_dl)))
+            score = idf * tf_norm(tf, dlf, k1, b, avg_dl)
             if store_dl:
                 blocks = encode_postings_blocks(doc_idx, tf, score, bs, dl=dl)
             else:

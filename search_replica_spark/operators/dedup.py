@@ -308,21 +308,23 @@ def dedup_ngram_jaccard(spark, sf_dir):
     # is a vectorized popcount(and) per candidate — no token explosion, no
     # array columns in any shuffle (candidates cross as two longs). Falls
     # back to the exploded-token equi-join verify when the bitset matrix
-    # would not be broadcast-sized.
+    # would not be broadcast-sized. The gate's inputs (doc and vocabulary
+    # counts) come from one distributed aggregate; the token sets reach the
+    # driver only when the gate passes.
     import pandas as pd
 
-    arr_pdf = (
-        d.select("doc_id", F.array_distinct(F.split("text", " ")).alias("_arr"))
-        .toPandas()
-    )
-    ids_sorted = np.sort(arr_pdf["doc_id"].to_numpy(np.int64))
-    order = np.argsort(arr_pdf["doc_id"].to_numpy(np.int64))
-    toks_in_id_order = arr_pdf["_arr"].to_numpy(object)[order]
-    flat = [t for arr in toks_in_id_order for t in arr]
-    codes, _uniq = pd.factorize(pd.Series(flat, dtype=object), sort=False)
-    n_vocab = len(_uniq)
-    words = max(1, -(-n_vocab // 64))
-    if ids_sorted.size * words * 8 <= 256 * 1024 * 1024:
+    n_docs, n_vocab = tok.agg(F.countDistinct("doc_id"), F.countDistinct("term")).first()
+    if n_docs * max(1, -(-n_vocab // 64)) * 8 <= 256 * 1024 * 1024:
+        arr_pdf = (
+            d.select("doc_id", F.array_distinct(F.split("text", " ")).alias("_arr"))
+            .toPandas()
+        )
+        ids_sorted = np.sort(arr_pdf["doc_id"].to_numpy(np.int64))
+        order = np.argsort(arr_pdf["doc_id"].to_numpy(np.int64))
+        toks_in_id_order = arr_pdf["_arr"].to_numpy(object)[order]
+        flat = [t for arr in toks_in_id_order for t in arr]
+        codes, _uniq = pd.factorize(pd.Series(flat, dtype=object), sort=False)
+        words = max(1, -(-len(_uniq) // 64))
         bits = np.zeros((ids_sorted.size, words), dtype=np.uint64)
         sizes = np.fromiter((len(a) for a in toks_in_id_order), dtype=np.int64,
                             count=ids_sorted.size)
@@ -735,14 +737,14 @@ def dedup_embedding_lsh(spark, sf_dir):
     # the jaccard bitset verify): candidates cross the final stage as two
     # longs, no re-scan/join of the embeddings table per side (was two
     # joins + an extra embeddings scan). Gated to broadcast-sized corpora;
-    # beyond the gate the equi-join verify below is the scale path.
-    import pandas as pd
-
-    e_pdf = e.select("vec_id", "emb").toPandas()
-    ids = e_pdf["vec_id"].to_numpy(np.int64)
-    order = np.argsort(ids)
-    ids_sorted = ids[order]
-    if ids_sorted.size * EMB_DIM * 8 <= 256 * 1024 * 1024:
+    # beyond the gate the equi-join verify below is the scale path. The
+    # gate counts rows distributively; vectors reach the driver only when
+    # it passes.
+    if e.count() * EMB_DIM * 8 <= 256 * 1024 * 1024:
+        e_pdf = e.select("vec_id", "emb").toPandas()
+        ids = e_pdf["vec_id"].to_numpy(np.int64)
+        order = np.argsort(ids)
+        ids_sorted = ids[order]
         mat = np.stack(
             [np.asarray(v, dtype=np.float64) for v in e_pdf["emb"].to_numpy(object)[order]]
         ) if ids_sorted.size else np.zeros((0, EMB_DIM))

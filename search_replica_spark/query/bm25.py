@@ -5,25 +5,30 @@ Implements the search semantics the reference delegates to Elasticsearch
 configures it). Three execution strategies, all rank-identical:
 
   1. ``bm25_topk_spark``  — fully distributed DataFrame plan: pushdown
-     ``term IN (...)`` to the segment parquet, Arrow-decode blocks, join doc
-     lengths, groupBy-sum, TakeOrdered top-k. This is the 100 TB path: the
-     scan touches only the query terms' row groups (segments are
+     ``term IN (...)`` to the segment parquet, Arrow-decode blocks,
+     groupBy-sum, TakeOrdered top-k. This is the 100 TB path: the scan
+     touches only the query terms' row groups (segments are
      range-partitioned + sorted by term), everything else is a small join.
+     There is ONE such plan (``_bm25_plan``), over a list of generations:
+     a plain index is a one-generation list, ``bm25_topk_spark_multigen``
+     passes generations.json, and ``bm25_topk_spark_pruned`` runs it over
+     the blocks that survive its block-max threshold.
   2. ``TermAtATimeScorer`` — low-latency NumPy path on fetched postings
      (p50-latency benchmark path).
   3. ``wand_topk``        — block-max WAND with per-block max-score skipping
      (BASELINE.json#north_star), over the same fetched postings.
 
-All strategies compute scores in float64 with idf from Python ``math.log``,
-summing per-doc contributions in sorted-term order where we control the
-order, so scores are bit-comparable with the oracle.
+Every strategy weighs a posting with the one kernel in ``query.weight``
+(``idf * tf_norm(...)``) in float64, summing per-doc contributions in
+sorted-term order where we control the order, so scores are
+bit-comparable with the oracle.
 """
 
 from __future__ import annotations
 
+import functools
 import heapq
 import json
-import math
 import os
 
 import numpy as np
@@ -38,6 +43,7 @@ from search_replica_spark.index.codec import (
     delta_decode,
     varint_decode,
 )
+from search_replica_spark.query.weight import idf as term_idf, idf_col, tf_norm
 
 
 # below this many blocks (from dict df counts), block-max pruning cannot
@@ -174,7 +180,7 @@ class IndexReader:
         return self._doc_len, self._doc_ids
 
     def idf(self, df: int) -> float:
-        return math.log(1.0 + (self.n_docs - df + 0.5) / (df + 0.5))
+        return term_idf(self.n_docs, df)
 
     # --- per-field norms surface (fielded_norms_topk) ---
     def field_stats(self) -> dict | None:
@@ -326,115 +332,206 @@ class IndexReader:
 
 
 # ---------------------------------------------------------------------------
-# Strategy 1: fully distributed DataFrame plan
+# Strategy 1: fully distributed DataFrame plan over a generation list
 # ---------------------------------------------------------------------------
+
+_NO_HITS = "doc_id long, score double"
+
+
+def slot_bases(gens: list[dict]) -> dict[int, int]:
+    """Slot base per live generation: their doc_idx spaces concatenate in
+    generation order into one global slot space."""
+    bases, acc = {}, 0
+    for g in gens:
+        if g["dir"]:
+            bases[g["gen"]] = acc
+            acc += g["n_docs"]
+    return bases
+
+
+def _plain_generation(index_dir: str, stats: dict) -> list[dict]:
+    """A plain ``build_index`` output as a read-only one-generation list —
+    the shape of a generations.json entry, without moving any file."""
+    return [{"gen": 0, "dir": index_dir, "n_docs": int(stats["n_docs"]),
+             "total_tokens": int(stats["total_tokens"]), "deleted_ids": []}]
+
+
+def _decode_postings(batches, with_dl: bool):
+    """mapInPandas decoder of posting blocks, one vectorized pass per Arrow
+    batch. ``doc_off`` (the block's generation slot base) makes slots
+    global; ``with_dl`` also decodes the in-block doc lengths (dls_bin,
+    empty on store_doclens=False indexes)."""
+    for pdf in batches:
+        if pdf.empty:
+            continue
+        counts = pdf["n"].to_numpy(np.int64)
+        out = {
+            "term": np.repeat(pdf["term"].to_numpy(object), counts),
+            "slot": decode_doc_blocks(
+                list(pdf["docs_bin"]), counts, pdf["doc_off"].to_numpy(np.int64)
+            ),
+            "tf": varint_decode(b"".join(pdf["tfs_bin"])).astype(np.int64),
+        }
+        if with_dl:
+            out["doc_len"] = varint_decode(b"".join(pdf["dls_bin"])).astype(np.int64)
+        yield pd.DataFrame(out)
+
+
+def union_all(dfs: list[DataFrame]) -> DataFrame:
+    out = dfs[0]
+    for d in dfs[1:]:
+        out = out.unionByName(d)
+    return out
+
+
+def _slot_scores(
+    spark: SparkSession,
+    gens: list[dict],
+    terms: list[str],
+    mode: str = "or",
+    block_filter=None,
+) -> DataFrame:
+    """DataFrame(slot, score) of every slot matching ``terms`` (all of them
+    for mode="and"), liveness not applied, over a generation list
+    (generations.json entries; ``dir`` None = tombstones only).
+
+    Per live generation, ``term IN`` is pushed into the segment scan, then
+    ``block_filter`` (segments → segments, e.g. the pruned plan's
+    surviving blocks) applies. The idf comes from the summed dictionary df
+    (broadcast). doc_len rides in the segment blocks (Lucene-norms-style),
+    so the hot path never joins the docs table; store_doclens=False indexes
+    (and stats.json files that predate the key) join it instead. N and
+    avgdl count every generation until a merge — ES/Lucene semantics."""
+    live = [g for g in gens if g["dir"]]
+    with open(os.path.join(live[0]["dir"], "stats.json")) as f:
+        st = json.load(f)
+    k1, b = st["k1"], st["b"]
+    has_dls = st.get("store_doclens", False)
+    n_docs = sum(int(g["n_docs"]) for g in gens)
+    avg_dl = sum(int(g["total_tokens"]) for g in gens) / n_docs if n_docs else 0.0
+    bases = slot_bases(gens)
+
+    def read(g, name):
+        return spark.read.parquet(os.path.join(g["dir"], name))
+
+    segs = []
+    for g in live:
+        seg = read(g, "segments").filter(F.col("term").isin(terms))
+        if block_filter is not None:
+            seg = block_filter(seg)
+        segs.append(seg.select(
+            "term", "n", "docs_bin", "tfs_bin", *(["dls_bin"] if has_dls else []),
+            F.lit(bases[g["gen"]]).alias("doc_off"),
+        ))
+    posts = union_all(segs).mapInPandas(
+        functools.partial(_decode_postings, with_dl=has_dls),
+        schema="term string, slot long, tf long" + (", doc_len long" if has_dls else ""),
+    )
+    if not has_dls:
+        posts = posts.join(union_all([
+            read(g, "docs").select(
+                (F.col("doc_idx") + F.lit(bases[g["gen"]])).alias("slot"), "doc_len"
+            )
+            for g in live
+        ]), "slot")
+    dicts = [read(g, "dict").filter(F.col("term").isin(terms)).select("term", "df")
+             for g in live]
+    dic = dicts[0] if len(dicts) == 1 else (
+        union_all(dicts).groupBy("term").agg(F.sum("df").alias("df"))
+    )
+    dic = dic.select("term", idf_col(n_docs, F.col("df")).alias("idf"))
+    scored = posts.join(F.broadcast(dic), "term").select(
+        "slot",
+        (F.col("idf") * tf_norm(F.col("tf"), F.col("doc_len"), k1, b, avg_dl)).alias("score"),
+    )
+    agg = scored.groupBy("slot").agg(F.sum("score").alias("score"), F.count("*").alias("_nm"))
+    if mode == "and":
+        # posting rows are unique per (term, slot), so the row count per slot
+        # IS the matched-term count; a term absent from the corpus caps it
+        # below len(terms) → empty result, matching ES operator:and
+        agg = agg.filter(F.col("_nm") == len(terms))
+    return agg.drop("_nm")
+
+
+def _bm25_plan(
+    spark: SparkSession,
+    gens: list[dict],
+    terms: list[str],
+    k: int,
+    mode: str = "or",
+    block_filter=None,
+) -> DataFrame:
+    """The one distributed BM25 plan: DataFrame(doc_id, score), top-k in
+    (score desc, doc_id asc) order, over a generation list (see
+    ``_slot_scores``).
+
+    Liveness (a slot is dead if its doc_id re-appears in a later
+    generation, or a strictly later tombstone covers it) is a distributed
+    anti-join, paid only when there is more than one live generation or a
+    tombstone newer than the live one. Otherwise slot order IS doc_id
+    order (doc_idx is assigned in doc_id order, and the first live
+    generation's slot base is 0), so top-k runs on slots and only k rows
+    look up their doc_id — one lazy plan."""
+    live = [g for g in gens if g["dir"]]
+    if not terms or not live:
+        return spark.createDataFrame([], _NO_HITS)
+    agg = _slot_scores(spark, gens, terms, mode, block_filter)
+    g = live[0]
+    if len(live) == 1 and not any(t.get("deleted_ids") and t["gen"] > g["gen"] for t in gens):
+        topk = agg.orderBy(F.col("score").desc(), F.col("slot").asc()).limit(k)
+        # doc_id lookup for k rows only: broadcast the top-k side into the scan
+        return (
+            spark.read.parquet(os.path.join(g["dir"], "docs"))
+            .select(F.col("doc_idx").alias("slot"), "doc_id")
+            .join(F.broadcast(topk), "slot")
+            .select("doc_id", "score")
+            .orderBy(F.col("score").desc(), F.col("doc_id").asc())
+        )
+    return (
+        agg.join(live_docs(spark, gens, ["doc_id"]), "slot")
+        .select("doc_id", "score")
+        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
+        .limit(k)
+    )
+
+
+def live_docs(spark: SparkSession, gens: list[dict], cols: list[str] | None = None) -> DataFrame:
+    """The live rows (``cols``, default all, plus ``slot``) of a generation
+    list's doc stores, as a distributed anti-join: a row is dead if its
+    doc_id re-appears in a later generation or a strictly later tombstone
+    covers it (a generation's own upserts beat its tombstones)."""
+    bases = slot_bases(gens)
+    ids = union_all([
+        spark.read.parquet(os.path.join(g["dir"], "docs")).select(
+            *(cols or ["*"]),
+            (F.col("doc_idx") + F.lit(bases[g["gen"]])).alias("slot"),
+            F.lit(g["gen"]).alias("gen"),
+        )
+        for g in gens if g["dir"]
+    ])
+    latest = ids.groupBy("doc_id").agg(F.max("gen").alias("max_gen"))
+    live = ids.join(latest, "doc_id").filter(F.col("gen") == F.col("max_gen"))
+    tombs = [(int(d), int(g["gen"])) for g in gens for d in g.get("deleted_ids", ())]
+    if tombs:
+        tmax = (
+            spark.createDataFrame(tombs, "doc_id long, del_gen int")
+            .groupBy("doc_id").agg(F.max("del_gen").alias("del_gen"))
+        )
+        live = live.join(F.broadcast(tmax), "doc_id", "left").filter(
+            F.col("del_gen").isNull() | (F.col("del_gen") <= F.col("gen"))
+        ).drop("del_gen")
+    return live.drop("gen", "max_gen")
+
 
 def bm25_topk_spark(
     spark: SparkSession, index_dir: str, query: str, k: int = 10, mode: str = "or"
 ) -> DataFrame:
-    """Distributed BM25 top-k: returns DataFrame(doc_id, score) ordered.
-    mode="and" = ES operator:and (all analyzed terms must match)."""
+    """Distributed BM25 top-k over a plain index: DataFrame(doc_id, score)
+    ordered. mode="and" = ES operator:and (all analyzed terms must match)."""
     with open(os.path.join(index_dir, "stats.json")) as f:
         stats = json.load(f)
-    n_docs, avg_dl, k1, b = stats["n_docs"], stats["avg_dl"], stats["k1"], stats["b"]
-    terms = sorted(set(tokenize_text(query)))
-    if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
-
-    seg = spark.read.parquet(os.path.join(index_dir, "segments")).filter(
-        F.col("term").isin(terms)
-    )
-    # df per term from the dictionary (pushdown on term), broadcast-joined.
-    dic = (
-        spark.read.parquet(os.path.join(index_dir, "dict"))
-        .filter(F.col("term").isin(terms))
-        .withColumn(
-            "idf",
-            F.log(F.lit(1.0) + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)),
-        )
-    )
-
-    def decode(batches):
-        # one vectorized decode per Arrow batch (decode_doc_blocks +
-        # joined varint streams) — no per-block pandas objects
-        for pdf in batches:
-            if pdf.empty:
-                yield pd.DataFrame({"term": pd.Series(dtype="object"),
-                                    "doc_idx": pd.Series(dtype="int64"),
-                                    "tf": pd.Series(dtype="int64"),
-                                    "doc_len": pd.Series(dtype="int64")})
-                continue
-            counts = pdf["n"].to_numpy(np.int64)
-            yield pd.DataFrame({
-                "term": np.repeat(pdf["term"].to_numpy(object), counts),
-                "doc_idx": decode_doc_blocks(list(pdf["docs_bin"]), counts),
-                "tf": varint_decode(b"".join(pdf["tfs_bin"])).astype(np.int64),
-                "doc_len": varint_decode(b"".join(pdf["dls_bin"])).astype(np.int64),
-            })
-
-    # doc_len rides inside the segment blocks (Lucene-norms-style), so the
-    # hot path needs NO join against the docs table — at 10^12 docs that
-    # join was the one shuffle this plan had left. doc_idx is assigned in
-    # doc_id order (assign_dense_doc_idx), so the (score desc, doc_idx asc)
-    # tie-break below is identical to tie-breaking on doc_id.
-    # (store_doclens=False indexes fall back to the docs join below.
-    # A stats.json that predates the dls_bin layout has no key at all —
-    # and no dls_bin column — so the missing key must default to False.)
-    has_dls = stats.get("store_doclens", False)
-    if has_dls:
-        posts = seg.select("term", "n", "docs_bin", "tfs_bin", "dls_bin").mapInPandas(
-            decode, schema="term string, doc_idx long, tf long, doc_len long"
-        )
-    else:
-        def decode_nodl(batches):
-            for pdf in batches:
-                if pdf.empty:
-                    yield pd.DataFrame({"term": pd.Series(dtype="object"),
-                                        "doc_idx": pd.Series(dtype="int64"),
-                                        "tf": pd.Series(dtype="int64")})
-                    continue
-                counts = pdf["n"].to_numpy(np.int64)
-                yield pd.DataFrame({
-                    "term": np.repeat(pdf["term"].to_numpy(object), counts),
-                    "doc_idx": decode_doc_blocks(list(pdf["docs_bin"]), counts),
-                    "tf": varint_decode(b"".join(pdf["tfs_bin"])).astype(np.int64),
-                })
-
-        raw = seg.select("term", "n", "docs_bin", "tfs_bin").mapInPandas(
-            decode_nodl, schema="term string, doc_idx long, tf long"
-        )
-        dl_tbl = spark.read.parquet(os.path.join(index_dir, "docs")).select(
-            "doc_idx", "doc_len"
-        )
-        posts = raw.join(dl_tbl, "doc_idx")
-    scored = posts.join(F.broadcast(dic.select("term", "idf")), "term").withColumn(
-        "score",
-        F.col("idf")
-        * F.col("tf")
-        / (
-            F.col("tf")
-            + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("doc_len") / F.lit(avg_dl))
-        ),
-    )
-    agg = scored.groupBy("doc_idx").agg(
-        F.sum("score").alias("score"), F.count("*").alias("_nm")
-    )
-    if mode == "and":
-        # posting rows are unique per (term, doc), so the row count per doc
-        # IS the matched-term count; a term absent from the corpus caps it
-        # below len(terms) → empty result, matching ES operator:and
-        agg = agg.filter(F.col("_nm") == len(terms))
-    topk = (
-        agg.drop("_nm")
-        .orderBy(F.col("score").desc(), F.col("doc_idx").asc())
-        .limit(k)
-    )
-    # doc_id lookup for k rows only: broadcast the top-k side into the scan
-    docs = spark.read.parquet(os.path.join(index_dir, "docs")).select("doc_idx", "doc_id")
-    return (
-        docs.join(F.broadcast(topk), "doc_idx")
-        .select("doc_id", "score")
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
+    return _bm25_plan(
+        spark, _plain_generation(index_dir, stats), sorted(set(tokenize_text(query))), k, mode
     )
 
 
@@ -450,7 +547,7 @@ def bm25_topk_spark_pruned(
     of ``bm25_topk_spark``: most block payloads are never Arrow-decoded, the
     scan reads their (tiny) metadata columns and skips the binary streams.
 
-    Two passes, both fully distributed:
+    Two passes of the same distributed plan, each over a block filter:
 
       1. **theta pass** — decode only each term's top-``k`` blocks by stored
          ``max_score`` (chosen from block metadata alone; parquet column
@@ -469,154 +566,67 @@ def bm25_topk_spark_pruned(
     relative epsilon on theta absorbs float summation-order differences).
     AND-mode theta needs conjunctive semantics — not implemented; use the
     unpruned plan. Pass ``prune_stats={}`` to receive blocks_total /
-    blocks_decoded counters (costs two extra metadata-only count jobs).
+    blocks_decoded counters (costs extra metadata-only count jobs) and,
+    when the one-pass plan ran instead, the ``fallback`` reason.
 
-    Overhead discipline (a pruned plan must never be strictly worse):
-      - the dictionary is read ONCE and collected (|terms| rows) — the idf
-        broadcast is built driver-side, no second dict scan;
-      - when the dictionary's df counts bound the query's total blocks
-        below ``PRUNE_MIN_BLOCKS``, pruning cannot pay for its own
-        metadata pass — fall through to one all-blocks scoring job;
-      - per-term gmax rides IN the dictionary (build-time enrichment,
-        ``_stage_segments``), so the query needs no segment-metadata job
-        at all: dict collect → theta job → main job. Legacy dicts without
-        the column fall back to one metadata aggregation.
+    Overhead discipline (a pruned plan must never be strictly worse): the
+    dictionary is read once and collected (|terms| rows of df and gmax);
+    per-term gmax rides IN the dictionary (build-time enrichment,
+    ``_stage_segments``; legacy dicts fall back to one metadata
+    aggregation); and the one-pass plan runs instead when the index has no
+    in-block doc lengths, the corpus is below ``min_docs`` (see
+    PRUNE_MIN_DOCS) or the dictionary's df counts bound the query's blocks
+    below ``PRUNE_MIN_BLOCKS``.
     """
-    import math as _math
-
     from pyspark.sql import Window
 
     with open(os.path.join(index_dir, "stats.json")) as f:
         stats = json.load(f)
+    gens = _plain_generation(index_dir, stats)
+    terms = sorted(set(tokenize_text(query)))
 
-    def _fallback_stats(reason: str) -> None:
-        # the docstring promises blocks_total/blocks_decoded whenever the
-        # caller passes prune_stats — on the unpruned fallback every block
-        # is decoded, so report total == decoded (one small filtered dict
-        # read; the caller opted into metadata jobs by asking for counters)
-        if prune_stats is None:
-            return
-        bsz = int(stats.get("block_size", 128))
-        terms_ = sorted(set(tokenize_text(query)))
-        nb = 0
-        if terms_:
-            rows = (
-                spark.read.parquet(os.path.join(index_dir, "dict"))
-                .filter(F.col("term").isin(terms_))
-                .select("df")
-                .collect()
-            )
-            nb = sum(-(-int(r["df"]) // bsz) for r in rows)
-        prune_stats.update(
-            blocks_total=nb,
-            blocks_decoded=nb,
-            blocks_theta_pass=0,
-            theta=0.0,
-            fallback=reason,
+    def blocks() -> DataFrame:
+        # opened on demand, only for counters and legacy gmax: opening a
+        # parquet dir costs a schema-inference job
+        return spark.read.parquet(os.path.join(index_dir, "segments")).filter(
+            F.col("term").isin(terms)
         )
 
-    if not stats.get("store_doclens", False):
-        _fallback_stats("no_doclens")  # no dls_bin → no fast path
-        return bm25_topk_spark(spark, index_dir, query, k)
-    if int(stats["n_docs"]) < min_docs:
-        # cost-based switch (see PRUNE_MIN_DOCS): at this corpus size the
-        # single-job plan is strictly faster; rank-identical either way.
-        # Tests force the pruning path with min_docs=0.
-        _fallback_stats("min_docs")
-        return bm25_topk_spark(spark, index_dir, query, k)
-    n_docs, avg_dl, k1, b = stats["n_docs"], stats["avg_dl"], stats["k1"], stats["b"]
-    block_size = int(stats.get("block_size", 128))
-    terms = sorted(set(tokenize_text(query)))
-    if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
+    def one_pass(reason: str) -> DataFrame:
+        # the docstring promises the counters whenever the caller passes
+        # prune_stats — the one-pass plan decodes every block
+        if prune_stats is not None:
+            nb = blocks().count() if terms else 0
+            prune_stats.update(blocks_total=nb, blocks_decoded=nb,
+                               blocks_theta_pass=0, theta=0.0, fallback=reason)
+        return _bm25_plan(spark, gens, terms, k)
 
-    seg = spark.read.parquet(os.path.join(index_dir, "segments")).filter(
-        F.col("term").isin(terms)
-    )
-    # one dict scan, collected: |terms| rows of (term, df, gmax) — enough
-    # to build the idf broadcast, bound the total block count, AND supply
-    # the per-term global max block score (written into the dict at build
-    # time precisely so the pruned plan never needs its own segment-
-    # metadata job; legacy dicts without the column fall back to one)
+    if not stats.get("store_doclens", False):
+        return one_pass("no_doclens")
+    if int(stats["n_docs"]) < min_docs:
+        # cost-based switch (see PRUNE_MIN_DOCS); tests force pruning with
+        # min_docs=0
+        return one_pass("min_docs")
+    if not terms:
+        return spark.createDataFrame([], _NO_HITS)
     dict_scan = spark.read.parquet(os.path.join(index_dir, "dict")).filter(
         F.col("term").isin(terms)
     )
     has_gmax = "gmax" in dict_scan.columns
-    dic_rows = dict_scan.select(
-        "term", "df", *(["gmax"] if has_gmax else [])
-    ).collect()
+    dic_rows = dict_scan.select("term", "df", *(["gmax"] if has_gmax else [])).collect()
     if not dic_rows:
-        return spark.createDataFrame([], "doc_id long, score double")
-    idf_of = {
-        r["term"]: _math.log(1.0 + (n_docs - r["df"] + 0.5) / (r["df"] + 0.5))
-        for r in dic_rows
-    }
-    dic = spark.createDataFrame(list(idf_of.items()), "term string, idf double")
-    blocks_bound = sum(-(-int(r["df"]) // block_size) for r in dic_rows)
+        return spark.createDataFrame([], _NO_HITS)
+    block_size = int(stats.get("block_size", 128))
+    if sum(-(-int(r["df"]) // block_size) for r in dic_rows) <= PRUNE_MIN_BLOCKS:
+        return one_pass("min_blocks")
 
-    def decode(batches):
-        # one vectorized pass per Arrow batch over ALL blocks (the same
-        # decode_doc_blocks path fetch_postings uses) — the surviving
-        # blocks are exactly the hot ones, so no per-block Python here
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            counts = pdf["n"].to_numpy(np.int64)
-            yield pd.DataFrame({
-                "term": np.repeat(pdf["term"].to_numpy(object), counts),
-                "doc_idx": decode_doc_blocks(list(pdf["docs_bin"]), counts),
-                "tf": varint_decode(b"".join(pdf["tfs_bin"])).astype(np.int64),
-                "doc_len": varint_decode(b"".join(pdf["dls_bin"])).astype(np.int64),
-            })
-
-    def score_agg(seg_subset):
-        posts = seg_subset.select("term", "n", "docs_bin", "tfs_bin", "dls_bin").mapInPandas(
-            decode, schema="term string, doc_idx long, tf long, doc_len long"
-        )
-        scored = posts.join(F.broadcast(dic), "term").withColumn(
-            "score",
-            F.col("idf") * F.col("tf")
-            / (F.col("tf")
-               + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("doc_len") / F.lit(avg_dl))),
-        )
-        return scored.groupBy("doc_idx").agg(F.sum("score").alias("score"))
-
-    # too few blocks for pruning to pay for its metadata pass → one
-    # all-blocks scoring job (still rank-identical; the unpruned shape)
-    if blocks_bound <= PRUNE_MIN_BLOCKS:
-        if prune_stats is not None:
-            nb = seg.count()
-            prune_stats.update(
-                blocks_total=nb, blocks_decoded=nb, blocks_theta_pass=0, theta=0.0
-            )
-        topk = (
-            score_agg(seg)
-            .orderBy(F.col("score").desc(), F.col("doc_idx").asc())
-            .limit(k)
-        )
-        docs = spark.read.parquet(os.path.join(index_dir, "docs")).select(
-            "doc_idx", "doc_id"
-        )
-        return (
-            docs.join(F.broadcast(topk), "doc_idx")
-            .select("doc_id", "score")
-            .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        )
-
-    # gmax per term: from the dict (build-time enrichment); legacy indexes
-    # without the column pay one segment-metadata job as before
     if has_gmax and all(r["gmax"] is not None for r in dic_rows):
         gmax = {r["term"]: float(r["gmax"]) for r in dic_rows}
     else:
         gmax = {
             r["term"]: float(r["gm"])
-            for r in seg.select("term", "max_score")
-            .groupBy("term")
-            .agg(F.max("max_score").alias("gm"))
-            .collect()
+            for r in blocks().groupBy("term").agg(F.max("max_score").alias("gm")).collect()
         }
-    if not gmax:
-        return spark.createDataFrame([], "doc_id long, score double")
     G = sum(gmax.values())
 
     # pass 1 (theta): each term's top-k blocks by max_score. The window
@@ -625,14 +635,20 @@ def bm25_topk_spark_pruned(
     # block selection and payload decode into ONE job (collecting the
     # window rows first was measured strictly worse, BENCH_r4 iteration)
     w = Window.partitionBy("term").orderBy(F.col("max_score").desc(), F.col("block_id"))
-    ph1_keys = (
-        seg.select("term", "block_id", "max_score")
-        .withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .select("term", "block_id")
-    )
+
+    def top_blocks(s: DataFrame) -> DataFrame:
+        return (
+            s.select("term", "block_id", "max_score")
+            .withColumn("_rk", F.row_number().over(w))
+            .filter(F.col("_rk") <= k)
+            .select("term", "block_id")
+        )
+
     kth = (
-        score_agg(seg.join(F.broadcast(ph1_keys), ["term", "block_id"]))
+        _slot_scores(
+            spark, gens, terms,
+            block_filter=lambda s: s.join(F.broadcast(top_blocks(s)), ["term", "block_id"]),
+        )
         .orderBy(F.col("score").desc())
         .limit(k)
         .collect()
@@ -644,23 +660,17 @@ def bm25_topk_spark_pruned(
     thr = spark.createDataFrame(
         [(t, theta - (G - gm)) for t, gm in gmax.items()], "term string, thr double"
     )
-    surv = seg.join(F.broadcast(thr), "term").filter(F.col("max_score") >= F.col("thr"))
+
+    def survivors(s: DataFrame) -> DataFrame:
+        return s.join(F.broadcast(thr), "term").filter(F.col("max_score") >= F.col("thr"))
+
     if prune_stats is not None:
+        seg = blocks()
         prune_stats["blocks_total"] = seg.count()
-        prune_stats["blocks_decoded"] = surv.count()
-        prune_stats["blocks_theta_pass"] = ph1_keys.count()
+        prune_stats["blocks_decoded"] = survivors(seg).count()
+        prune_stats["blocks_theta_pass"] = top_blocks(seg).count()
         prune_stats["theta"] = theta
-    topk = (
-        score_agg(surv)
-        .orderBy(F.col("score").desc(), F.col("doc_idx").asc())
-        .limit(k)
-    )
-    docs = spark.read.parquet(os.path.join(index_dir, "docs")).select("doc_idx", "doc_id")
-    return (
-        docs.join(F.broadcast(topk), "doc_idx")
-        .select("doc_id", "score")
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    )
+    return _bm25_plan(spark, gens, terms, k, block_filter=survivors)
 
 
 def _select_topk(scores: np.ndarray, docids: np.ndarray, k: int) -> list[tuple[int, float]]:
@@ -726,7 +736,7 @@ class TermAtATimeScorer:
             dl = doc_len[docs]
             tf = tfs.astype(np.float64)
             doc_parts.append(docs)
-            score_parts.append(idf * (tf / (tf + r.k1 * (1.0 - r.b + r.b * dl / r.avg_dl))))
+            score_parts.append(idf * tf_norm(tf, dl, r.k1, r.b, r.avg_dl))
         if not doc_parts:
             return []
         all_docs = np.concatenate(doc_parts)
@@ -832,7 +842,7 @@ def phrase_topk(
     idxs = cand[hit]
     pt = ptf[hit]
     dl = doc_len[idxs]
-    scores = idf_sum * pt / (pt + r.k1 * (1.0 - r.b + r.b * dl / r.avg_dl))
+    scores = idf_sum * tf_norm(pt, dl, r.k1, r.b, r.avg_dl)
     return _select_topk(scores, doc_ids[idxs], k)
 
 
@@ -950,7 +960,7 @@ def span_near_or_topk(
     idxs = cand[hit]
     pt = ptf[hit]
     dl = doc_len[idxs]
-    scores = idf_sum * pt / (pt + r.k1 * (1.0 - r.b + r.b * dl / r.avg_dl))
+    scores = idf_sum * tf_norm(pt, dl, r.k1, r.b, r.avg_dl)
     return _select_topk(scores, doc_ids[idxs], k)
 
 
@@ -995,7 +1005,7 @@ def span_first_topk(
     idf = r.idf(len(docs))
     tf = tf_early[mask].astype(np.float64)
     dl = reader.doc_arrays()[0][idxs]
-    scores = idf * tf / (tf + r.k1 * (1.0 - r.b + r.b * dl / r.avg_dl))
+    scores = idf * tf_norm(tf, dl, r.k1, r.b, r.avg_dl)
     return _select_topk(scores, reader.doc_arrays()[1][idxs], k)
 
 
@@ -1068,7 +1078,7 @@ def span_not_topk(
         return []
     tf = surviving[mask].astype(np.float64)
     dl = doc_len[idxs]
-    scores = idf * tf / (tf + r.k1 * (1.0 - r.b + r.b * dl / r.avg_dl))
+    scores = idf * tf_norm(tf, dl, r.k1, r.b, r.avg_dl)
     return _select_topk(scores, doc_ids[idxs], k)
 
 
@@ -1297,7 +1307,7 @@ def bool_topk(
         dl = doc_len[docs]
         tf = tfs.astype(np.float64)
         doc_parts.append(docs)
-        score_parts.append(idf * (tf / (tf + r.k1 * (1.0 - r.b + r.b * dl / r.avg_dl))))
+        score_parts.append(idf * tf_norm(tf, dl, r.k1, r.b, r.avg_dl))
         must_parts.append(np.full(docs.shape, term in must, dtype=np.int64))
     if not doc_parts:
         return []  # no must terms and every should term absent from the corpus
@@ -1683,9 +1693,7 @@ def sharded_topk(
             tf = tfs[m].astype(np.float64)
             dl = doc_len[d]
             doc_parts.append(d)
-            score_parts.append(
-                idfs[term] * (tf / (tf + r.k1 * (1.0 - r.b + r.b * dl / r.avg_dl)))
-            )
+            score_parts.append(idfs[term] * tf_norm(tf, dl, r.k1, r.b, r.avg_dl))
         if not doc_parts:
             continue
         all_docs = np.concatenate(doc_parts)
@@ -1818,9 +1826,7 @@ def serve_topk(
             dl = doc_len[docs]
             tf = tfs.astype(np.float64)
             doc_parts.append(docs)
-            score_parts.append(
-                idf * (tf / (tf + r.k1 * (1.0 - r.b + r.b * dl / r.avg_dl)))
-            )
+            score_parts.append(idf * tf_norm(tf, dl, r.k1, r.b, r.avg_dl))
         local: list[tuple[int, float]] = []
         if doc_parts:
             all_docs = np.concatenate(doc_parts)
@@ -2009,7 +2015,7 @@ def wand_topk(
             if docs.size == 0:
                 return []
         dl = doc_len[docs]
-        scores = c.idf * (tf / (tf + r.k1 * (1.0 - r.b + r.b * dl / r.avg_dl)))
+        scores = c.idf * tf_norm(tf, dl, r.k1, r.b, r.avg_dl)
         if stats is not None:
             stats["blocks_total"] = len(c.blk_last)
             stats["blocks_decoded"] = len(c.blk_last)
@@ -2025,7 +2031,7 @@ def wand_topk(
         for c in cursors:  # cursors are in sorted-term order → deterministic sum
             if c.cur_doc() == didx:
                 tf = c.cur_tf()
-                s += c.idf * (tf / (tf + r.k1 * (1.0 - r.b + r.b * dl / r.avg_dl)))
+                s += c.idf * tf_norm(tf, dl, r.k1, r.b, r.avg_dl)
         return s
 
     while True:
@@ -2380,7 +2386,7 @@ def explain_score(
             continue  # term not in this doc
         tf = float(tfs[pos[0]])
         idf = reader.idf(df)
-        contrib = idf * (tf / (tf + reader.k1 * (1.0 - reader.b + reader.b * dl / reader.avg_dl)))
+        contrib = idf * tf_norm(tf, dl, reader.k1, reader.b, reader.avg_dl)
         out.append({
             "term": term, "tf": int(tf), "df": df,
             "idf": round(idf, 6), "contribution": round(contrib, 6),
@@ -2492,16 +2498,12 @@ def fielded_norms_topk(
         n_f, avg_f = int(st["n"]), float(st["avg_dl"])
         docs, tfs, _g = postings[term]
         df = len(docs)
-        idf = math.log(1.0 + (n_f - df + 0.5) / (df + 0.5))
+        idf = term_idf(n_f, df)
         dl = fdl[fld][docs]
         tf = tfs.astype(np.float64)
         boost = float(boosts.get(fld, 1.0)) if boosts else 1.0
         doc_parts.append(docs)
-        score_parts.append(
-            boost
-            * idf
-            * (tf / (tf + reader.k1 * (1.0 - reader.b + reader.b * dl / avg_f)))
-        )
+        score_parts.append(boost * idf * tf_norm(tf, dl, reader.k1, reader.b, avg_f))
     if not doc_parts:
         return []
     all_docs = np.concatenate(doc_parts)
@@ -2809,7 +2811,7 @@ def terms_set_topk(
         dl = doc_len[docs]
         tf = tfs.astype(np.float64)
         doc_parts.append(docs)
-        score_parts.append(idf * (tf / (tf + r.k1 * (1.0 - r.b + r.b * dl / r.avg_dl))))
+        score_parts.append(idf * tf_norm(tf, dl, r.k1, r.b, r.avg_dl))
     all_docs = np.concatenate(doc_parts)
     uniq, inv = np.unique(all_docs, return_inverse=True)
     sums = np.zeros(uniq.size, np.float64)

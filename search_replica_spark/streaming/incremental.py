@@ -55,7 +55,15 @@ from search_replica_spark.analysis import tokenize_text
 from search_replica_spark.config import IndexConfig
 from search_replica_spark.errors import SchemaMismatch, with_retries
 from search_replica_spark.index.build import build_index, with_doc_ids
-from search_replica_spark.query.bm25 import IndexReader, TermAtATimeScorer, wand_topk
+from search_replica_spark.query.bm25 import (
+    IndexReader,
+    TermAtATimeScorer,
+    _bm25_plan,
+    live_docs,
+    slot_bases,
+    union_all,
+    wand_topk,
+)
 
 GENS_FILE = "generations.json"
 CHANGE_COL = "_change_type"  # insert | update | update_partial | delete
@@ -1274,7 +1282,7 @@ class MultiGenReader(IndexReader):
     avgdl increases, so WAND pruning stays lossless (rank-identity tested).
     """
 
-    def __init__(self, spark, index_dir: str, k1: float = 1.2, b: float = 0.75,
+    def __init__(self, spark, index_dir: str,
                  shard_range: tuple[int, int] | None = None):
         self.spark = spark
         self.index_dir = index_dir
@@ -1282,16 +1290,15 @@ class MultiGenReader(IndexReader):
         if not self.gens:
             raise FileNotFoundError(f"no generations at {index_dir}")
         self.live_gens = [g for g in self.gens if g["dir"]]
-        self.k1, self.b = k1, b
+        # k1/b are index settings, fixed at creation: the generations'
+        # stats.json, never library defaults (WAND's stored block maxima
+        # were computed with them)
+        cfg = derive_index_cfg(index_dir)
+        self.k1, self.b = cfg.k1, cfg.b
         self.n_docs = int(sum(g["n_docs"] for g in self.gens))
         total_tokens = sum(g["total_tokens"] for g in self.gens)
         self.avg_dl = total_tokens / self.n_docs if self.n_docs else 0.0
-        # slot base per live generation (docs concatenate in gen order)
-        self.bases = {}
-        acc = 0
-        for g in self.live_gens:
-            self.bases[g["gen"]] = acc
-            acc += g["n_docs"]
+        self.bases = slot_bases(self.gens)
         # per-gen local stats for block-max rescale
         self._gen_stats = {
             g["gen"]: (g["n_docs"], (g["total_tokens"] / g["n_docs"]) if g["n_docs"] else 0.0)
@@ -1355,10 +1362,7 @@ class MultiGenReader(IndexReader):
                 self._doc_len = np.empty(0, np.float64)
                 self._doc_ids = np.empty(0, np.int64)
                 return self._doc_len, self._doc_ids
-            uni = parts[0]
-            for p in parts[1:]:
-                uni = uni.unionByName(p)
-            pdf = uni.toPandas()
+            pdf = union_all(parts).toPandas()
             pdf["slot"] = pdf["doc_idx"] + pdf["gen"].map(self.bases)
             pdf = pdf.sort_values("slot")
             self._doc_len = pdf["doc_len"].to_numpy(np.float64)
@@ -1407,9 +1411,7 @@ class MultiGenReader(IndexReader):
             )
             for g in self.live_gens
         ]
-        uni = parts[0]
-        for p in parts[1:]:
-            uni = uni.unionByName(p)
+        uni = union_all(parts)
         w = W.partitionBy("doc_id").orderBy(F.col("gen").desc())
         dead = (
             uni.withColumn("_rn", F.row_number().over(w))
@@ -1456,9 +1458,33 @@ class MultiGenReader(IndexReader):
         pdf["block_id"] = pdf.groupby("term", sort=False).cumcount()
         return pdf.drop(columns=["gen"])
 
-    def _gen_cols(self, seg, positions: bool):
+    def _read_blocks(self, positions: bool, terms=None):
+        """One union read of every live generation's segment blocks (only
+        those of ``terms`` when given), block-range-pruned to this reader's
+        shard per generation, remapped onto global slots."""
+        import pandas as pd
+
         cols = list(self.META_COLS) + (list(self.POS_COLS) if positions else [])
-        return [c for c in cols if c in seg.columns]
+        parts = []
+        for g in self.live_gens:
+            seg = self.spark.read.parquet(os.path.join(g["dir"], "segments"))
+            q = seg if terms is None else seg.filter(F.col("term").isin(list(set(terms))))
+            rng = self._gen_slot_filter(g)
+            if rng is not None:
+                glo, ghi = rng
+                if glo >= ghi:
+                    continue  # generation entirely outside this shard
+                # block-range pruning per generation (gen-local doc_idx)
+                q = q.filter(
+                    (F.col("last_doc_idx") >= glo) & (F.col("first_doc_idx") < ghi)
+                )
+            parts.append(
+                q.select(*[c for c in cols if c in seg.columns])
+                .withColumn("gen", F.lit(g["gen"]))
+            )
+        if not parts:
+            return self._remap_blocks(pd.DataFrame(columns=[*self.META_COLS, "gen"]))
+        return self._remap_blocks(union_all(parts).toPandas())
 
     def fetch_blocks(self, terms, positions: bool = False):
         if self._pinned is not None and (
@@ -1468,34 +1494,7 @@ class MultiGenReader(IndexReader):
             if not hit:
                 return self._pinned.iloc[0:0].reset_index(drop=True)
             return self._pinned.loc[hit].reset_index(drop=True).sort_values(["term", "block_id"])
-        tset = list(set(terms))
-        parts = []
-        for g in self.live_gens:
-            seg = self.spark.read.parquet(os.path.join(g["dir"], "segments"))
-            q = seg.filter(F.col("term").isin(tset))
-            rng = self._gen_slot_filter(g)
-            if rng is not None:
-                glo, ghi = rng
-                if glo >= ghi:
-                    continue
-                # block-range pruning per generation (gen-local doc_idx)
-                q = q.filter(
-                    (F.col("last_doc_idx") >= glo) & (F.col("first_doc_idx") < ghi)
-                )
-            parts.append(
-                q.select(*self._gen_cols(seg, positions))
-                .withColumn("gen", F.lit(g["gen"]))
-            )
-        if not parts:
-            import pandas as pd
-
-            return self._remap_blocks(
-                pd.DataFrame(columns=[*self.META_COLS, "gen"])
-            )
-        uni = parts[0]
-        for p in parts[1:]:
-            uni = uni.unionByName(p)
-        return self._remap_blocks(uni.toPandas())
+        return self._read_blocks(positions, terms)
 
     def pin_driver(self, positions: bool = False):
         """Serving mode over ALL generations: one union read pins every
@@ -1503,34 +1502,7 @@ class MultiGenReader(IndexReader):
         A shard-scoped reader pins only blocks overlapping its slot range
         — the per-node memory contract of doc-sharded serving."""
         if self._pinned is None:
-            parts = []
-            for g in self.live_gens:
-                seg = self.spark.read.parquet(os.path.join(g["dir"], "segments"))
-                q = seg
-                rng = self._gen_slot_filter(g)
-                if rng is not None:
-                    glo, ghi = rng
-                    if glo >= ghi:
-                        continue
-                    q = q.filter(
-                        (F.col("last_doc_idx") >= glo)
-                        & (F.col("first_doc_idx") < ghi)
-                    )
-                parts.append(
-                    q.select(*self._gen_cols(seg, positions))
-                    .withColumn("gen", F.lit(g["gen"]))
-                )
-            if not parts:
-                import pandas as pd
-
-                pdf = self._remap_blocks(
-                    pd.DataFrame(columns=[*self.META_COLS, "gen"])
-                )
-            else:
-                uni = parts[0]
-                for p in parts[1:]:
-                    uni = uni.unionByName(p)
-                pdf = self._remap_blocks(uni.toPandas())
+            pdf = self._read_blocks(positions)
             self._pinned = pdf.sort_values(["term", "block_id"]).set_index("term", drop=False)
         return self
 
@@ -1552,11 +1524,7 @@ class MultiGenReader(IndexReader):
                 q = q.filter(extra_filter)
             return q.select("term")
 
-        parts = [one(g) for g in self.live_gens]
-        uni = parts[0]
-        for p in parts[1:]:
-            uni = uni.unionByName(p)
-        q = uni.distinct().orderBy("term")
+        q = union_all([one(g) for g in self.live_gens]).distinct().orderBy("term")
         if max_expansions is not None:
             q = q.limit(max_expansions)
         return [row["term"] for row in q.collect()]
@@ -1599,10 +1567,7 @@ class MultiGenReader(IndexReader):
             )
             for g in self.live_gens
         ]
-        uni = parts[0]
-        for p in parts[1:]:
-            uni = uni.unionByName(p)
-        pdf = uni.toPandas().sort_values("slot")
+        pdf = union_all(parts).toPandas().sort_values("slot")
         return {f: pdf[f"dl_{f}"].to_numpy(np.float64) for f in fields}
 
     # --- query API (same scorers as a single-generation index) ---
@@ -1684,39 +1649,13 @@ def merge_generations(spark, index_dir: str, cfg: IndexConfig | None = None) -> 
         cfg = dataclasses.replace(
             cfg, store_positions=has_positions, store_source=has_source
         )
-    bases, acc = {}, 0
-    for g in live_gens:
-        bases[g["gen"]] = acc
-        acc += g["n_docs"]
-
-    def union_all(dfs):
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out
-
-    docs_u = union_all(
-        [
-            spark.read.parquet(os.path.join(g["dir"], "docs"))
-            .withColumn("slot", F.col("doc_idx") + F.lit(bases[g["gen"]]))
-            .withColumn("gen", F.lit(g["gen"]))
-            for g in live_gens
-        ]
-    )
-    latest = docs_u.groupBy("doc_id").agg(F.max("gen").alias("max_gen"))
-    live = docs_u.join(latest, "doc_id").filter(F.col("gen") == F.col("max_gen"))
-    tomb_rows = [(int(d), g["gen"]) for g in gens for d in g.get("deleted_ids", ())]
-    if tomb_rows:
-        tombs = spark.createDataFrame(tomb_rows, "doc_id long, del_gen int")
-        tmax = tombs.groupBy("doc_id").agg(F.max("del_gen").alias("del_gen"))
-        live = live.join(F.broadcast(tmax), "doc_id", "left").filter(
-            F.col("del_gen").isNull() | (F.col("del_gen") <= F.col("gen"))
-        )
+    bases = slot_bases(gens)
     # keep every column the docs stores carry (store_source rides through)
     meta_cols = [
-        c for c in docs_u.columns if c not in ("doc_idx", "slot", "gen", "max_gen")
+        c for c in spark.read.parquet(os.path.join(live_gens[0]["dir"], "docs")).columns
+        if c != "doc_idx"
     ]
-    live = live.select("slot", *meta_cols)
+    live = live_docs(spark, gens).select("slot", *meta_cols)
     if live.isEmpty():
         raise ValueError("merge would produce an empty index (everything deleted)")
 
@@ -1793,131 +1732,20 @@ def merge_generations(spark, index_dir: str, cfg: IndexConfig | None = None) -> 
 
 def bm25_topk_spark_multigen(spark, index_dir: str, query: str, k: int = 10,
                              mode: str = "or"):
-    """Fully DISTRIBUTED BM25 over a generational index — the third strategy
-    (bm25_topk_spark) extended across generations. Everything is DataFrame
-    ops: per-generation term-IN-pruned segment scans union'd, Arrow decode
-    with per-generation slot offsets, merged-df idf broadcast, and LIVENESS
-    as a distributed anti-join (a slot is dead if its doc_id re-appears in a
-    later generation, or a strictly-later tombstone covers it) — no driver
-    array of corpus size anywhere, unlike MultiGenReader's pinned-shard
-    arrays. The liveness join is the one cost a generational index cannot
-    avoid (Lucene pays it as per-segment liveDocs bitmaps); AQE broadcasts
-    the matched-slot side for selective queries, and compaction bounds it.
+    """Fully DISTRIBUTED BM25 over a generational index: the one distributed
+    plan (``query.bm25._bm25_plan``) over the generations.json list.
+    Everything is DataFrame ops — per-generation term-IN-pruned segment
+    scans, Arrow decode at per-generation slot bases, merged-df idf
+    broadcast, and LIVENESS as a distributed anti-join — no driver array of
+    corpus size anywhere, unlike MultiGenReader's pinned-shard arrays. The
+    liveness join is the one cost a generational index cannot avoid
+    (Lucene pays it as per-segment liveDocs bitmaps); a single live
+    generation without newer tombstones skips it, and merging bounds it.
     """
-    import pandas as pd
-
-    from search_replica_spark.index.codec import delta_decode, varint_decode
-
     gens = _load_gens(index_dir)
     if not gens:
         raise FileNotFoundError(f"no generations at {index_dir}")
-    live_gens = [g for g in gens if g["dir"]]
-    n_docs = int(sum(g["n_docs"] for g in gens))
-    total_tokens = sum(g["total_tokens"] for g in gens)
-    avg_dl = total_tokens / n_docs if n_docs else 0.0
-    bases, acc = {}, 0
-    for g in live_gens:
-        bases[g["gen"]] = acc
-        acc += g["n_docs"]
-    with open(os.path.join(live_gens[0]["dir"], "stats.json")) as f:
-        gstats = json.load(f)
-    k1, b = gstats["k1"], gstats["b"]
-    terms = sorted(set(tokenize_text(query)))
-    if not terms or not live_gens:
-        return spark.createDataFrame([], "doc_id long, score double")
-
-    def union_all(dfs):
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out
-
-    seg = union_all(
-        [
-            spark.read.parquet(os.path.join(g["dir"], "segments"))
-            .filter(F.col("term").isin(terms))
-            .select(
-                "term", "n", "docs_bin", "tfs_bin", "dls_bin",
-                F.lit(bases[g["gen"]]).alias("doc_off"),
-            )
-            for g in live_gens
-        ]
-    )
-    dic = (
-        union_all(
-            [
-                spark.read.parquet(os.path.join(g["dir"], "dict"))
-                .filter(F.col("term").isin(terms))
-                for g in live_gens
-            ]
-        )
-        .groupBy("term")
-        .agg(F.sum("df").alias("df"))
-        .withColumn(
-            "idf",
-            F.log(F.lit(1.0) + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)),
-        )
-    )
-
-    def decode(batches):
-        from search_replica_spark.index.codec import decode_doc_blocks
-
-        # one vectorized pass per Arrow batch; per-block doc_off (each
-        # generation's slot base) rides through decode_doc_blocks
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            counts = pdf["n"].to_numpy("int64")
-            yield pd.DataFrame({
-                "term": np.repeat(pdf["term"].to_numpy(object), counts),
-                "slot": decode_doc_blocks(
-                    list(pdf["docs_bin"]), counts, pdf["doc_off"].to_numpy("int64")
-                ),
-                "tf": varint_decode(b"".join(pdf["tfs_bin"])).astype("int64"),
-                "doc_len": varint_decode(b"".join(pdf["dls_bin"])).astype("int64"),
-            })
-
-    posts = seg.mapInPandas(decode, schema="term string, slot long, tf long, doc_len long")
-    scored = posts.join(F.broadcast(dic.select("term", "idf")), "term").withColumn(
-        "score",
-        F.col("idf") * F.col("tf")
-        / (F.col("tf") + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("doc_len") / F.lit(avg_dl))),
-    )
-    agg = scored.groupBy("slot").agg(F.sum("score").alias("score"), F.count("*").alias("_nm"))
-    if mode == "and":
-        agg = agg.filter(F.col("_nm") == len(terms))
-    agg = agg.drop("_nm")
-
-    # distributed liveness: slot -> (doc_id, gen); latest gen per doc wins,
-    # strictly-later tombstones kill older slots
-    docs_u = union_all(
-        [
-            spark.read.parquet(os.path.join(g["dir"], "docs"))
-            .select(
-                (F.col("doc_idx") + F.lit(bases[g["gen"]])).alias("slot"),
-                "doc_id",
-                F.lit(g["gen"]).alias("gen"),
-            )
-            for g in live_gens
-        ]
-    )
-    tomb_rows = [
-        (int(d), g["gen"]) for g in gens for d in g.get("deleted_ids", ())
-    ]
-    latest = docs_u.groupBy("doc_id").agg(F.max("gen").alias("max_gen"))
-    live_docs = docs_u.join(latest, "doc_id").filter(F.col("gen") == F.col("max_gen"))
-    if tomb_rows:
-        tombs = spark.createDataFrame(tomb_rows, "doc_id long, del_gen int")
-        tmax = tombs.groupBy("doc_id").agg(F.max("del_gen").alias("del_gen"))
-        live_docs = live_docs.join(F.broadcast(tmax), "doc_id", "left").filter(
-            F.col("del_gen").isNull() | (F.col("del_gen") <= F.col("gen"))
-        )
-    cand = agg.join(live_docs.select("slot", "doc_id"), "slot")
-    return (
-        cand.select("doc_id", "score")
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(k)
-    )
+    return _bm25_plan(spark, gens, sorted(set(tokenize_text(query))), k, mode)
 
 
 # retained for callers that tokenized via this module

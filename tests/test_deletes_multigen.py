@@ -400,3 +400,49 @@ def test_single_gen_liveness_fast_path(spark, corpus2, tmp_path):
     assert mg._live.dead.size == 1
     did = doc_id_of(a["repo"].iloc[7], a["path"].iloc[7])
     assert did not in [d for d, _ in mg.score("the", 100)]
+
+
+def test_multigen_readers_use_the_index_k1_b(spark, corpus2, tmp_path):
+    """MultiGenReader scores with the index's own k1/b (stats.json), not
+    library defaults: TAAT, WAND (whose stored block maxima were computed
+    with the index's k1/b) and the distributed plan agree on an index
+    built with non-default parameters."""
+    import dataclasses
+
+    from search_replica_spark.streaming.incremental import bm25_topk_spark_multigen
+
+    a, b = corpus2
+    cfg = dataclasses.replace(CFG, k1=2.0, b=0.3)
+    idx = str(tmp_path / "k1b")
+    add_generation(spark, spark.createDataFrame(a), idx, cfg)
+    add_generation(spark, spark.createDataFrame(b), idx, cfg)
+    mg = MultiGenReader(spark, idx)
+    assert (mg.k1, mg.b) == (2.0, 0.3)
+    for q in ("license apache", "def return", "the"):
+        taat = [(d, round(s, 9)) for d, s in mg.score(q, 10)]
+        wand = [(d, round(s, 9)) for d, s in mg.wand(q, 10)]
+        rows = bm25_topk_spark_multigen(spark, idx, q, 10).collect()
+        assert taat == wand == [(r.doc_id, round(r.score, 9)) for r in rows], q
+
+
+def test_distributed_multigen_without_doclens(spark, corpus2, tmp_path):
+    """A store_doclens=False generational index has empty dls_bin streams:
+    the distributed plan takes doc_len from the docs tables instead and
+    stays rank-identical to MultiGenReader."""
+    import dataclasses
+
+    from search_replica_spark.streaming.incremental import bm25_topk_spark_multigen
+
+    a, b = corpus2
+    cfg = dataclasses.replace(CFG, store_doclens=False)
+    idx = str(tmp_path / "nodl")
+    add_generation(spark, spark.createDataFrame(a), idx, cfg)
+    upd = a.iloc[[4]].copy()
+    upd["content"] = "qqnodlqq updated body license"
+    add_generation(spark, spark.createDataFrame(pd.concat([upd, b])), idx, cfg)
+    mg = MultiGenReader(spark, idx)
+    assert len(mg.live_gens) == 2
+    for q in ("license apache", "qqnodlqq", "def return"):
+        want = [(d, round(s, 9)) for d, s in mg.score(q, 10)]
+        rows = bm25_topk_spark_multigen(spark, idx, q, 10).collect()
+        assert [(r.doc_id, round(r.score, 9)) for r in rows] == want, q
